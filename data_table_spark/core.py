@@ -23,44 +23,69 @@ from __future__ import annotations
 
 from typing import Any, Iterable, Sequence
 
+import pyarrow as pa
+from pyspark.errors import PySparkTypeError, PySparkValueError
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from .config import DEFAULT_CONFIG, EngineConfig
 from .functions.formatting import format_value
-from .inference import (
-    auto_type,
-    coerce_table,
-    ensure_column_types,
-    guess_types,
-    guess_types_with_audit,
-)
+from .inference import auto_type_one_pass, guess_types
 from .names import dedupe_names, resolve_column, spark_safe_name, symbolize_name
-from .sources.registry import local_slices
 
 ROW_ID = "_row_id"
 
-def _local_relation(spark: SparkSession, data, schema) -> DataFrame:
-    """Driver-side literal rows → DataFrame, sliced by input size.
+def _local_relation(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
+    """Driver-side rows → JVM-resident relation with the given (already
+    resolved) schema: a ``pyarrow.Table`` built column by column with each
+    field's Arrow type, shipped once by ``createDataFrame``. Under
+    ``spark.sql.execution.arrow.localRelationThreshold`` it is a
+    ``LocalRelation``: no job over it starts a Python worker (a Python-RDD
+    relation starts one per job to unpickle its rows), and Catalyst folds
+    filters and projections over it, so a cell read runs no job. Not via
+    pandas, whose float64 would corrupt nullable longs past 2^53.
+    Timestamps go through ``TimestampType.toInternal`` as UTC µs."""
+    columns = zip(*rows) if rows else [()] * len(schema.fields)
+    arrays = [_arrow_column(f.dataType, v) for f, v in zip(schema.fields, columns)]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema.names), schema)
 
-    ``createDataFrame`` over a python list parallelizes into
-    defaultParallelism slices regardless of size, so a 6-row fixture
-    schedules one pickled-python task PER CORE on EVERY job that
-    touches it (measured ~0.33 s warm per no-op materialize of a 6-row
-    facade table on local[32] — scheduling + python-worker round trips,
-    zero data; multi-job facade paths like coerce_types pay it
-    repeatedly). The facade constructors therefore run the standard
-    list-path ``createDataFrame`` ONCE for its full-list driver-side
-    type inference and untyped-cell demotion (semantics untouched),
-    then rebuild the frame here on a right-sized RDD with the RESOLVED
-    schema — identical per-row converters, one python round trip per
-    job instead of one per core (sources.registry.local_df rationale;
-    slicing = local_slices, one slice per 10k rows)."""
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(data, local_slices(spark, len(data))),
-        schema,
-    )
+
+def _arrow_column(dtype: T.DataType, values) -> pa.Array:
+    if isinstance(dtype, T.TimestampType):
+        micros = [dtype.toInternal(v) for v in values]
+        return pa.array(micros, pa.timestamp("us", tz="UTC"))
+    if isinstance(dtype, T.StringType):
+        # list inference types mixed scalars + strings as string, and the
+        # list path renders the scalars as text (bools lower-case, JVM-style)
+        values = [
+            v if v is None or isinstance(v, str)
+            else str(v).lower() if isinstance(v, bool) else str(v)
+            for v in values
+        ]
+    return pa.array(values, to_arrow_type(dtype))
+
+
+def _ingest(spark: SparkSession, rows: list[tuple], names: list[str]) -> DataFrame:
+    """Facade rows ``(row_id, *cells)`` → relation. Cells keep their
+    Python types when createDataFrame's list inference types every column
+    (the reference's rows hold values as-is). When it cannot (mixed cells,
+    an all-NULL column, no rows), the table demotes to strings — the
+    reference's untyped-cell model, recoverable via coerce_types(). Any
+    other error propagates."""
+    try:
+        schema = spark._inferSchemaFromList(rows, names=names)
+    except (PySparkTypeError, PySparkValueError):
+        rows = [
+            tuple([r[0]] + [None if v is None else str(v) for v in r[1:]])
+            for r in rows
+        ]
+        schema = T.StructType(
+            [T.StructField(ROW_ID, T.LongType())]
+            + [T.StructField(n, T.StringType()) for n in names[1:]]
+        )
+    return _local_relation(spark, rows, schema)
 
 
 def with_row_id(df: DataFrame, col: str = ROW_ID) -> DataFrame:
@@ -155,32 +180,7 @@ class DataTable:
             tuple([i] + [r.get(k) for k in fetch_keys])
             for i, r in enumerate(records)
         ]
-        if rows:
-            # same untyped-cell demotion as from_rows: when inference
-            # cannot determine a column's type (e.g. all-NULL), the
-            # table falls back to strings, recoverable via coerce_types()
-            try:
-                df = spark.createDataFrame(rows, schema=[ROW_ID, *keys])
-            except Exception:
-                str_rows = [
-                    tuple(
-                        [r[0]]
-                        + [None if v is None else str(v) for v in r[1:]]
-                    )
-                    for r in rows
-                ]
-                str_schema = T.StructType(
-                    [T.StructField(ROW_ID, T.LongType())]
-                    + [T.StructField(k, T.StringType()) for k in keys]
-                )
-                rows, df = str_rows, spark.createDataFrame(str_rows, str_schema)
-            df = _local_relation(spark, rows, df.schema)
-        else:
-            schema = T.StructType(
-                [T.StructField(ROW_ID, T.LongType())]
-                + [T.StructField(k, T.StringType()) for k in keys]
-            )
-            df = spark.createDataFrame([], schema)
+        df = _ingest(spark, rows, [ROW_ID, *keys])
         return cls(df, config=config, _has_row_id=True, _n_rows=len(rows))
 
     @classmethod
@@ -205,35 +205,7 @@ class DataTable:
             tuple([i] + list(r) + [None] * (width - len(r)))
             for i, r in enumerate(rows)
         ]
-        names = [ROW_ID, *names]
-        # Cells keep their Python types when the column is homogeneous
-        # (the reference's rows hold values as-is); when inference cannot
-        # determine or merge a column's type (mixed cells, all-NULL
-        # column), the whole table demotes to strings — the deterministic
-        # Spark rendering of the reference's untyped-cell model, with
-        # types recoverable via coerce_types().
-        str_schema = T.StructType(
-            [T.StructField(ROW_ID, T.LongType())]
-            + [T.StructField(n, T.StringType()) for n in names[1:]]
-        )
-        if not padded:
-            return cls(
-                spark.createDataFrame([], str_schema),
-                config=config,
-                _has_row_id=True,
-                _n_rows=0,
-            )
-        try:
-            df = spark.createDataFrame(padded, schema=list(names))
-        except Exception:
-            padded = [
-                tuple(
-                    [r[0]] + [None if v is None else str(v) for v in r[1:]]
-                )
-                for r in padded
-            ]
-            df = spark.createDataFrame(padded, str_schema)
-        df = _local_relation(spark, padded, df.schema)
+        df = _ingest(spark, padded, [ROW_ID, *names])
         return cls(df, config=config, _has_row_id=True, _n_rows=len(padded))
 
     @classmethod
@@ -391,10 +363,11 @@ class DataTable:
             name = dt.column_names[dt.column_index(col)]
             spark = dt._df.sparkSession
             val_rows = [(i, v) for i, v in enumerate(values)]
-            vals_df = spark.createDataFrame(
-                val_rows, schema=[ROW_ID, "_dt_new"]
+            vals_df = _local_relation(
+                spark,
+                val_rows,
+                spark._inferSchemaFromList(val_rows, names=[ROW_ID, "_dt_new"]),
             )
-            vals_df = _local_relation(spark, val_rows, vals_df.schema)
             old_c, new_c = F.col(name), F.col("_dt_new")
             if dict(dt._df.dtypes)[name] != dict(vals_df.dtypes)["_dt_new"]:
                 # untyped-cell model: mixing value types demotes the column
@@ -634,36 +607,20 @@ class DataTable:
         infer_dates: bool = True,
     ) -> "DataTable":
         """Infer + strictly coerce (coerce-data-table-of-strings-to-types,
-        data-table.lisp:387-407).
-
-        Round-14 fast path (guide §1.2: fewer jobs): when the row count
-        is statically known to fit the guess sample (so the head sample
-        IS the whole table) and no explicit types override the guess,
-        the strict-coercion audit's answer is computed inside the guess
-        agg itself (inference.guess_types_with_audit) — one job instead
-        of two, byte-identical outcome by construction. Larger or
-        unknown tables keep the two-job guess-then-audit path."""
-        on_error = on_error or self.config.on_coerce_error
-        sample_size = self.config.guessing_sample_size
-        if (
-            self._n_rows is not None
-            and self._n_rows <= sample_size
-            and not explicit
-        ):
-            types, audit = guess_types_with_audit(
-                self._df.drop(ROW_ID),
-                sample_size=sample_size,
-                infer_dates=infer_dates,
-            )
-            df = coerce_table(
-                self._df, types, on_error=on_error, _audit_counts=audit
-            )
-        else:
-            types = ensure_column_types(
-                self._df.drop(ROW_ID), explicit,
-                sample_size, infer_dates,
-            )
-            df = coerce_table(self._df, types, on_error=on_error)
+        data-table.lisp:387-407) in one aggregate job over the table
+        (inference.auto_type_one_pass): the guess counters see the head
+        sample, ``_row_id < guessing_sample_size`` — the first rows in the
+        table's own order, the rows ``limit()`` returns — and the
+        strict-coercion audit counters see every row, so a bad value past
+        the sample still demotes its column."""
+        df = auto_type_one_pass(
+            self._df,
+            ROW_ID,
+            explicit,
+            self.config.guessing_sample_size,
+            on_error or self.config.on_coerce_error,
+            infer_dates,
+        )
         return self._rebind(df, n_rows=self._n_rows)
 
     # ---------- output (R22-R23, R26) ----------
@@ -774,7 +731,7 @@ class DataTable:
     # engine stays immutable; the _bang forms rebind THIS facade in place.
 
     def _mutate(self, other: "DataTable") -> "DataTable":
-        self._df = other._df
+        self._df, self._n_rows = other._df, other._n_rows
         return self
 
     def set_value_bang(self, value, row_idx=None, col=None) -> "DataTable":

@@ -3,7 +3,9 @@
 Everything here is built from ``pyspark.sql.functions`` so it stays inside
 whole-stage codegen — no Python UDFs on the hot path. Each function also has
 a SQL-text twin (``*_sql``) so the same semantics can be spliced into
-``spark.sql`` strings (a zero-cost alternative to UDF registration).
+``selectExpr`` / ``spark.sql`` strings; the inference plans
+(inference.py) and the SQL-defined functions (sql_functions.py) are built
+from the twins, so each rule has one SQL definition.
 
 Reference citations (into /root/reference/):
 - trim-whitespace / trim-and-nullify: data-table.lisp:40-56
@@ -22,6 +24,9 @@ _TRIM_EDGE = r"^[\s ]+|[\s ]+$"
 
 #: Characters stripped by relaxed numeric parsing (data-table.lisp:86).
 _NUMERIC_JUNK = r"[\s $,%]"
+
+#: Integer literal syntax accepted by the lenient integer parse.
+_INT_RE = r"^[+-]?[0-9]+$"
 
 
 def trim_whitespace(col: Column | str) -> Column:
@@ -53,19 +58,48 @@ def relaxed_long(col: Column | str) -> Column:
     # invariant: only strings matching an integer literal parse; the regex
     # guard makes that explicit rather than relying on string→long cast
     # behavior, which differs across Spark versions and ANSI modes.
-    is_int = stripped.rlike(r"^[+-]?\d+$")
-    return F.when(is_int, stripped.cast("long")).otherwise(F.lit(None).cast("long"))
+    return F.when(stripped.rlike(_INT_RE), stripped.try_cast("long")).otherwise(
+        F.lit(None).cast("long")
+    )
 
 
-# --- SQL-text twins (for splicing into spark.sql / DuckDB oracle strings) ---
+# --- SQL-text twins (tests/test_facade_one_pass.py holds each equal to its
+# Column form). ``*_of_stripped_sql`` take an already junk-stripped value,
+# so a plan can strip once per row and parse it several ways.
+
+
+def _sql_str(s: str) -> str:
+    """Python string → Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def trim_whitespace_sql(expr: str) -> str:
+    return f"REGEXP_REPLACE({expr}, {_sql_str(_TRIM_EDGE)}, '')"
+
 
 def trim_and_nullify_sql(expr: str) -> str:
+    t = trim_whitespace_sql(expr)
+    return f"CASE WHEN LOWER({t}) IN ('', 'nil') THEN NULL ELSE {t} END"
+
+
+def strip_numeric_junk_sql(expr: str) -> str:
+    return f"REGEXP_REPLACE({expr}, {_sql_str(_NUMERIC_JUNK)}, '')"
+
+
+def double_of_stripped_sql(stripped: str) -> str:
+    return f"TRY_CAST({stripped} AS DOUBLE)"
+
+
+def integer_of_stripped_sql(stripped: str, sql_type: str = "BIGINT") -> str:
     return (
-        "CASE WHEN LOWER(REGEXP_REPLACE({e}, '^[\\\\s\\u00a0]+|[\\\\s\\u00a0]+$', '')) "
-        "IN ('', 'nil') THEN NULL "
-        "ELSE REGEXP_REPLACE({e}, '^[\\\\s\\u00a0]+|[\\\\s\\u00a0]+$', '') END"
-    ).format(e=expr)
+        f"CASE WHEN {stripped} RLIKE {_sql_str(_INT_RE)} "
+        f"THEN TRY_CAST({stripped} AS {sql_type}) END"
+    )
 
 
 def relaxed_double_sql(expr: str) -> str:
-    return f"CAST(REGEXP_REPLACE({expr}, '[\\\\s$,%]', '') AS DOUBLE)"
+    return double_of_stripped_sql(strip_numeric_junk_sql(expr))
+
+
+def relaxed_long_sql(expr: str) -> str:
+    return integer_of_stripped_sql(strip_numeric_junk_sql(expr))

@@ -16,26 +16,20 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-_TRIM = "REGEXP_REPLACE({s}, '^[\\\\s\\u00a0]+|[\\\\s\\u00a0]+$', '')"
-_STRIP = "REGEXP_REPLACE({s}, '[\\\\s$,% ]', '')"
+from .cleaning import relaxed_double_sql, relaxed_long_sql, trim_and_nullify_sql
 
 _DEFS = [
     (
         "dt_trim_nullify",
-        "(s STRING) RETURNS STRING RETURN "
-        f"CASE WHEN LOWER({_TRIM.format(s='s')}) IN ('', 'nil') THEN NULL "
-        f"ELSE {_TRIM.format(s='s')} END",
+        f"(s STRING) RETURNS STRING RETURN {trim_and_nullify_sql('s')}",
     ),
     (
         "dt_relaxed_double",
-        "(s STRING) RETURNS DOUBLE RETURN "
-        f"TRY_CAST({_STRIP.format(s='s')} AS DOUBLE)",
+        f"(s STRING) RETURNS DOUBLE RETURN {relaxed_double_sql('s')}",
     ),
     (
         "dt_relaxed_bigint",
-        "(s STRING) RETURNS BIGINT RETURN "
-        f"CASE WHEN {_STRIP.format(s='s')} RLIKE '^[+-]?[0-9]+$' "
-        f"THEN TRY_CAST({_STRIP.format(s='s')} AS BIGINT) END",
+        f"(s STRING) RETURNS BIGINT RETURN {relaxed_long_sql('s')}",
     ),
     (
         "dt_fmt2",

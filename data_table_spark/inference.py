@@ -1,7 +1,7 @@
 """Sampling-based type inference + strict coercion (SURVEY §1.3).
 
-Reproduces the reference's guessing lattice on Spark, as ONE aggregation job
-over a bounded sample — never a full scan, never a driver-side transpose:
+Reproduces the reference's guessing lattice on Spark as aggregates of
+per-column counters — never a driver-side transpose:
 
 - sample-rows / *guessing-types-sample-size* = 1000 (data-table.lisp:292-307)
 - assign-types-to-column per-value pipeline date→integer→float→string
@@ -18,22 +18,33 @@ Documented improvement over the reference: ISO-dateish columns infer as
 TIMESTAMP (the reference lets guessed dates degrade to string,
 data-table.lisp:343); disable with ``infer_dates=False`` for bug-parity.
 
-Scale notes: the sample is ``df.limit(n)`` (reads only the first partitions
-— O(n), not O(table)); candidate counting is one narrow agg over ≤1000 rows;
-the coercion audit is a single agg over the full table that Catalyst fuses
-with the cast projection. No collect() of data, only of per-column counters.
+Every pass is SQL text built from the ``*_sql`` twins in
+functions/cleaning.py, one ``selectExpr`` per layer: trimmed values and
+junk-stripped values (once per row), then one aggregate of counters; only
+counters are collected. ``guess_types`` aggregates the head sample
+(``limit(n)``, O(n) at any table size). ``auto_type_one_pass`` (the facade,
+whose frames carry a dense row-order column) answers guess AND audit in ONE
+aggregate: guess counters over ``row_id < n``, audit counters over every
+row. ``auto_type`` (frames with no row order) runs a head-sample guess,
+then an audit. Audit and cast share ``_cast_sql``, so the audit counts
+exactly the values the cast turns into NULL.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from .config import GUESSING_TYPES_SAMPLE_SIZE, LARGEST_NUMBER
-from .functions.cleaning import _NUMERIC_JUNK, relaxed_double, trim_and_nullify
+from .functions.cleaning import (
+    _INT_RE,
+    _sql_str,
+    double_of_stripped_sql,
+    integer_of_stripped_sql,
+    strip_numeric_junk_sql,
+    trim_and_nullify_sql,
+)
 
-_INT_RE = r"^[+-]?[0-9]+$"
 _TS_RE = r"^\d{4}-\d{2}-\d{2}([ T]\d{2}:\d{2}(:\d{2}(\.\d+)?)?)?$"
 
 
@@ -61,52 +72,123 @@ def simplify_type(value) -> str:
     return "string"
 
 
-def _candidate_exprs(col: str) -> list[Column]:
-    """Counting expressions for one column's candidate types (runs over the
-    sample; equivalent of assign-types-to-column, data-table.lisp:309-329).
+def _q(name: str) -> str:
+    """Column name → backquoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
-    The last three counters (round-14) count strict-coercion FAILURES per
-    candidate type, built from the very ``_cast_value_expr`` the coercion
-    audit applies — so when the sample provably covers the whole table
-    (facade row-count hint ≤ sample size) the audit's answer is already
-    in the guess result and its separate full-table agg job can be
-    skipped with a byte-identical outcome (guess_types_with_audit)."""
-    v = trim_and_nullify(F.col(col))
-    stripped = F.regexp_replace(v, _NUMERIC_JUNK, "")
-    is_int_syntax = stripped.rlike(_INT_RE)
+
+def _cast_sql(v: str, s: str, dtype: T.DataType) -> str:
+    """Strict-coercion cast of a trimmed value ``v`` whose junk-stripped
+    form is ``s`` — the ONE definition both the cast projection and the
+    audit counters use."""
+    if isinstance(dtype, T.DoubleType):
+        return double_of_stripped_sql(s)
+    if isinstance(dtype, (T.LongType, T.IntegerType)):
+        return integer_of_stripped_sql(s, dtype.simpleString())
+    if isinstance(dtype, T.TimestampType):
+        return f"TRY_TO_TIMESTAMP({v})"
+    if isinstance(dtype, T.StringType):
+        return v
+    return f"TRY_CAST({v} AS {dtype.simpleString()})"
+
+
+def _guess_sql(i: int, in_sample: str) -> list[str]:
+    """The four lattice counters of column ``i`` (assign-types-to-column,
+    data-table.lisp:309-329) over the layer values ``_v{i}``/``_s{i}``,
+    counting only rows where ``in_sample`` holds."""
+    v, s = f"_v{i}", f"_s{i}"
+    int_syntax = f"{s} RLIKE {_sql_str(_INT_RE)}"
     # 2^63 range check on integer syntax without overflow: decimal(38,0)
-    # (2^63 itself doesn't fit a Java long, so the literal goes in as a
-    # string cast to decimal)
-    big = F.lit(str(LARGEST_NUMBER)).cast(T.DecimalType(38, 0))
-    in_long_range = F.abs(stripped.try_cast(T.DecimalType(38, 0))) < big
-    is_int_ok = is_int_syntax & F.coalesce(in_long_range, F.lit(False))
-    dbl = relaxed_double(v)
-    is_dbl_ok = dbl.isNotNull() & (F.abs(dbl) < F.lit(float(LARGEST_NUMBER)))
-    is_ts = v.rlike(_TS_RE) & F.try_to_timestamp(v).isNotNull()
-    non_null = v.isNotNull()
-    bad = non_null & ~is_dbl_ok & ~is_int_ok & ~is_ts
+    # (2^63 itself doesn't fit a Java long, so it goes in as a string)
+    in_range = (
+        f"COALESCE(ABS(TRY_CAST({s} AS DECIMAL(38,0))) "
+        f"< CAST('{LARGEST_NUMBER}' AS DECIMAL(38,0)), FALSE)"
+    )
+    int_ok = f"({int_syntax} AND {in_range})"
+    dbl = double_of_stripped_sql(s)
+    dbl_ok = f"({dbl} IS NOT NULL AND ABS({dbl}) < {LARGEST_NUMBER}D)"
+    is_ts = f"({v} RLIKE {_sql_str(_TS_RE)} AND TRY_TO_TIMESTAMP({v}) IS NOT NULL)"
+    nn = f"{v} IS NOT NULL"
     # ints with |v| >= 2^63 parse fine as doubles; the reference still
     # demotes them to string (data-table.lisp:274-276)
-    bad = bad | (is_int_syntax & ~F.coalesce(in_long_range, F.lit(False)))
-    non_int = non_null & is_dbl_ok & ~is_int_ok & ~is_ts
-    c = F.count
+    bad = (
+        f"({nn} AND NOT {dbl_ok} AND NOT {int_ok} AND NOT {is_ts}) "
+        f"OR ({int_syntax} AND NOT {in_range})"
+    )
+    conds = {
+        "nn": nn,
+        "bad": bad,
+        "nonint": f"{nn} AND {dbl_ok} AND NOT {int_ok} AND NOT {is_ts}",
+        "nonts": f"{nn} AND NOT {is_ts}",
+    }
     return [
-        c(F.when(non_null, 1)).alias(f"{col}__nn"),
-        c(F.when(bad, 1)).alias(f"{col}__bad"),
-        c(F.when(non_int, 1)).alias(f"{col}__nonint"),
-        c(F.when(non_null & ~is_ts, 1)).alias(f"{col}__nonts"),
-        c(
-            F.when(non_null & _cast_value_expr(v, T.LongType()).isNull(), 1)
-        ).alias(f"{col}__lbad"),
-        c(
-            F.when(non_null & _cast_value_expr(v, T.DoubleType()).isNull(), 1)
-        ).alias(f"{col}__dbad"),
-        c(
-            F.when(
-                non_null & _cast_value_expr(v, T.TimestampType()).isNull(), 1
-            )
-        ).alias(f"{col}__tbad"),
+        f"COUNT(CASE WHEN {in_sample} AND ({c}) THEN 1 END) AS _g{i}_{k}"
+        for k, c in conds.items()
     ]
+
+
+def _counts(
+    df: DataFrame,
+    guess: list[str],
+    audits: list[tuple[str, T.DataType]],
+    in_sample: str = "TRUE",
+) -> dict[str, int]:
+    """ONE aggregate job: the lattice counters ``_g{i}_*`` of each column
+    in ``guess`` over the rows where ``in_sample`` holds, and the
+    strict-coercion failure count ``_a{j}`` of each ``audits[j]`` =
+    (column, type) over every row. Three selectExpr layers: trimmed
+    values, junk-stripped values, counters."""
+    if not guess and not audits:
+        return {}
+    cols = list(dict.fromkeys([*guess, *(c for c, _ in audits)]))
+    idx = {c: i for i, c in enumerate(cols)}
+    values = df.selectExpr(
+        f"{in_sample} AS _in",
+        *[f"{trim_and_nullify_sql(_q(c))} AS _v{i}" for i, c in enumerate(cols)],
+    ).selectExpr(
+        "_in",
+        *[f"_v{i}" for i in range(len(cols))],
+        *[f"{strip_numeric_junk_sql(f'_v{i}')} AS _s{i}" for i in range(len(cols))],
+    )
+    exprs = [e for c in guess for e in _guess_sql(idx[c], "_in")]
+    for j, (c, t) in enumerate(audits):
+        v, s = f"_v{idx[c]}", f"_s{idx[c]}"
+        exprs.append(
+            f"COUNT(CASE WHEN {v} IS NOT NULL AND {_cast_sql(v, s, t)} IS NULL "
+            f"THEN 1 END) AS _a{j}"
+        )
+    return values.selectExpr(*exprs).collect()[0].asDict()
+
+
+def _pick(counts: dict[str, int], i: int, infer_dates: bool) -> T.DataType:
+    """Lattice resolution (guess-types-for-data-table,
+    data-table.lisp:336-343) from column ``i``'s counters."""
+    nn, bad, nonint, nonts = (
+        counts[f"_g{i}_{k}"] for k in ("nn", "bad", "nonint", "nonts")
+    )
+    if nn == 0 or bad > 0:
+        return T.StringType()       # any string candidate wins (lisp:337-338, 343)
+    if infer_dates and nonts == 0:
+        return T.TimestampType()    # documented improvement (SURVEY §1.3)
+    if nonint == 0:
+        return T.LongType()         # exactly {integer} (lisp:339-340)
+    return T.DoubleType()           # {int,double} mix (lisp:341-342)
+
+
+def _string_columns(df: DataFrame, exclude=()) -> list[str]:
+    return [
+        f.name
+        for f in df.schema.fields
+        if isinstance(f.dataType, T.StringType) and f.name not in exclude
+    ]
+
+
+def _as_types(types: dict | None) -> dict[str, T.DataType]:
+    """DDL-string specs ("bigint", "decimal(10,2)") → DataType."""
+    return {
+        c: (T.DataType.fromDDL(t) if isinstance(t, str) else t)
+        for c, t in (types or {}).items()
+    }
 
 
 def guess_types(
@@ -116,95 +198,28 @@ def guess_types(
     infer_dates: bool = True,
     sample_mode: str = "head",
 ) -> dict[str, T.DataType]:
-    """Infer a Spark type per (string) column from a bounded sample.
-
-    One job: sample → single agg of 4 counters per column
-    (guess-types-for-data-table, data-table.lisp:331-343).
-
-    sample_mode:
-    - 'head' (default): ``limit(n)`` — reads only the first partitions,
-      O(n) regardless of table size; the right default at 100 TB.
-    - 'reservoir': distributed reservoir via ``rdd.takeSample`` — exact
-      parity with the reference's sample-rows (data-table.lisp:295-307),
-      but scans the full table once; opt in when head rows are biased
-      (e.g. a sorted file whose early rows are all-numeric).
-    """
-    columns = columns or [
-        f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)
-    ]
+    """Infer a Spark type per (string) column from a bounded sample, with
+    one aggregate of 4 counters per column over it
+    (guess-types-for-data-table, data-table.lisp:331-343). sample_mode
+    'head' (default): ``limit(n)``, reads only the first partitions, O(n)
+    at any table size. 'reservoir': ``rdd.takeSample``, exact parity with
+    the reference's sample-rows (data-table.lisp:295-307) at the price of
+    a full scan; for biased heads (e.g. a sorted file)."""
+    columns = columns or _string_columns(df)
     if not columns:
         return {}
-    types, _ = _guess_with_counters(
-        df, columns, sample_size, infer_dates, sample_mode
-    )
-    return types
-
-
-def _guess_with_counters(
-    df: DataFrame,
-    columns: list[str],
-    sample_size: int,
-    infer_dates: bool,
-    sample_mode: str,
-) -> tuple[dict[str, T.DataType], dict[str, int]]:
-    """guess_types' engine: one agg job over the sample; returns the
-    resolved types AND the sample-side strict-coercion failure count for
-    each column's PICKED type (0 for string picks — strings never fail)."""
+    sample = df.select(*columns)
     if sample_mode == "reservoir":
-        rows = df.select(*columns).rdd.takeSample(False, sample_size, seed=42)
+        from .core import _local_relation
+
+        rows = sample.rdd.takeSample(False, sample_size, seed=42)
         if not rows:
-            return {c: T.StringType() for c in columns}, dict.fromkeys(columns, 0)
-        # ≤1000 sampled rows ride one slice: a default-parallelized
-        # literal costs one python-worker round trip PER CORE per job
-        sample = df.sparkSession.createDataFrame(
-            df.sparkSession.sparkContext.parallelize(rows, 1),
-            df.select(*columns).schema,
-        )
+            return {c: T.StringType() for c in columns}
+        sample = _local_relation(df.sparkSession, rows, sample.schema)
     else:
-        sample = df.select(*columns).limit(sample_size)
-    exprs = [e for c in columns for e in _candidate_exprs(c)]
-    row = sample.agg(*exprs).collect()[0].asDict()
-    out: dict[str, T.DataType] = {}
-    bad_counts: dict[str, int] = {}
-    for c in columns:
-        nn, bad, nonint, nonts = (
-            row[f"{c}__nn"], row[f"{c}__bad"], row[f"{c}__nonint"], row[f"{c}__nonts"],
-        )
-        if nn == 0 or bad > 0:
-            out[c] = T.StringType()       # any string candidate wins (lisp:337-338, 343)
-            bad_counts[c] = 0
-        elif infer_dates and nonts == 0:
-            out[c] = T.TimestampType()    # documented improvement (SURVEY §1.3)
-            bad_counts[c] = row[f"{c}__tbad"]
-        elif nonint == 0:
-            out[c] = T.LongType()         # exactly {integer} (lisp:339-340)
-            bad_counts[c] = row[f"{c}__lbad"]
-        else:
-            out[c] = T.DoubleType()       # {int,double} mix (lisp:341-342)
-            bad_counts[c] = row[f"{c}__dbad"]
-    return out, bad_counts
-
-
-def guess_types_with_audit(
-    df: DataFrame,
-    columns: list[str] | None = None,
-    sample_size: int = GUESSING_TYPES_SAMPLE_SIZE,
-    infer_dates: bool = True,
-) -> tuple[dict[str, T.DataType], dict[str, int]]:
-    """guess_types PLUS the strict-coercion audit answer, in the same
-    single agg job — valid ONLY when the caller guarantees the table has
-    at most ``sample_size`` rows (then the head sample IS the table, so
-    the per-type failure counters equal what coerce_table's audit agg
-    would count over the full table; the counter expressions are built
-    from the same ``_cast_value_expr`` the audit uses, so the identity
-    is textual). Callers with unknown or larger row counts must keep
-    the two-job guess-then-audit path."""
-    columns = columns or [
-        f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)
-    ]
-    if not columns:
-        return {}, {}
-    return _guess_with_counters(df, columns, sample_size, infer_dates, "head")
+        sample = sample.limit(sample_size)
+    counts = _counts(sample, columns, [])
+    return {c: _pick(counts, i, infer_dates) for i, c in enumerate(columns)}
 
 
 def ensure_column_types(
@@ -215,117 +230,81 @@ def ensure_column_types(
 ) -> dict[str, T.DataType]:
     """Merge explicitly-provided types over inferred ones; only guess where
     needed (ensure-column-data-types, data-table.lisp:371-385: keeps any
-    explicit non-string types, guesses the rest). DDL-string specs are
-    normalized to DataType so downstream isinstance dispatch (relaxed
-    double / junk-stripping int paths) still applies."""
-    explicit = {
-        c: (T.DataType.fromDDL(t) if isinstance(t, str) else t)
-        for c, t in (explicit or {}).items()
-    }
-    need = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, T.StringType) and f.name not in explicit
-    ]
-    guessed = guess_types(df, need, sample_size, infer_dates)
+    explicit non-string types, guesses the rest)."""
+    explicit = _as_types(explicit)
+    need = _string_columns(df, explicit)
+    guessed = guess_types(df, need, sample_size, infer_dates) if need else {}
     guessed.update(explicit)
     return guessed
 
 
-def _cast_value_expr(v: Column, dtype: T.DataType) -> Column:
-    """Strict-coercion cast over an already trim-and-nullified value —
-    the ONE definition both the coercion audit and the guess-side
-    failure counters use (their equivalence is textual, not proven)."""
-    if isinstance(dtype, T.DoubleType):
-        return relaxed_double(v)
-    if isinstance(dtype, (T.LongType, T.IntegerType)):
-        stripped = F.regexp_replace(v, _NUMERIC_JUNK, "")
-        return F.when(stripped.rlike(_INT_RE), stripped.try_cast(dtype)).otherwise(
-            F.lit(None).cast(dtype)
-        )
-    if isinstance(dtype, T.TimestampType):
-        return F.try_to_timestamp(v)
-    if isinstance(dtype, T.StringType):
-        return v
-    return v.try_cast(dtype)
+def _check_on_error(on_error: str) -> None:
+    # a closed set like the reference's restarts (lisp:398-404): an
+    # unknown policy must not silently become lenient-null
+    if on_error not in ("raise", "string", "null"):
+        raise ValueError(f"on_error must be raise/string/null, not {on_error!r}")
 
 
-def _cast_expr(col: str, dtype: T.DataType) -> Column:
-    return _cast_value_expr(trim_and_nullify(F.col(col)), dtype)
+def _targets(df: DataFrame, types: dict[str, T.DataType]) -> dict[str, T.DataType]:
+    return {
+        c: t
+        for c, t in types.items()
+        if c in df.columns and not isinstance(t, T.StringType)
+    }
+
+
+def _apply(
+    df: DataFrame,
+    types: dict[str, T.DataType],
+    bad: dict[str, int],
+    on_error: str,
+) -> DataFrame:
+    """Strict coercion from audit counts (data-table.lisp:387-407): a
+    failing column raises bad-type-guess (``'raise'``) or stays string
+    (``'string'``, assume-column-is-string, lisp:398-404); ``'null'``
+    keeps failed casts as NULL. Layers: trim-and-nullify, then cast."""
+    targets = _targets(df, types)
+    strings = {c for c in types if c in df.columns and c not in targets}
+    if on_error != "null":
+        for c, n in bad.items():
+            if n:
+                if on_error == "raise":
+                    raise BadTypeGuess(c, targets[c].simpleString(), n)
+                del targets[c]
+                strings.add(c)
+    if not targets and not strings:
+        return df
+    trimmed = df.selectExpr(*[
+        f"{trim_and_nullify_sql(_q(c))} AS {_q(c)}"
+        if c in targets or c in strings else _q(c)
+        for c in df.columns
+    ])
+    if not targets:
+        return trimmed
+    return trimmed.selectExpr(*[
+        f"{_cast_sql(_q(c), strip_numeric_junk_sql(_q(c)), targets[c])} AS {_q(c)}"
+        if c in targets else _q(c)
+        for c in df.columns
+    ])
 
 
 def coerce_table(
     df: DataFrame,
     types: dict[str, T.DataType],
     on_error: str = "string",
-    _audit_counts: dict[str, int] | None = None,
 ) -> DataFrame:
     """Cast string columns to their target types with the reference's strict
     semantics (coerce-data-table-of-strings-to-types, data-table.lisp:387-407).
 
-    Spark's cast is NULL-on-failure; the reference RAISES. We audit in one
-    agg: count rows where the raw value was non-null but the cast came out
-    NULL. ``on_error='raise'`` reproduces the bad-type-guess error;
-    ``'string'`` reproduces the assume-column-is-string restart (the whole
-    column stays string). ``'null'`` keeps the nulls (lenient mode, not in
-    the reference).
-
-    Type specs may be DataType instances or DDL strings ("bigint",
-    "decimal(10,2)") — strings are normalized up front so the
-    StringType short-circuit and error paths see real types.
-    """
-    if on_error not in ("raise", "string", "null"):
-        # an unrecognized policy must not silently become lenient-null —
-        # the reference's restart names are a closed set (lisp:398-404)
-        raise ValueError(
-            f"on_error must be 'raise', 'string', or 'null'; got {on_error!r}"
-        )
-    types = {
-        c: (T.DataType.fromDDL(t) if isinstance(t, str) else t)
-        for c, t in types.items()
-    }
-    targets = {
-        c: t
-        for c, t in types.items()
-        if c in df.columns and not isinstance(t, T.StringType)
-    }
-    str_cols = [c for c, t in types.items() if isinstance(t, T.StringType) and c in df.columns]
-    if not targets and not str_cols:
-        return df
-    if targets and on_error in ("raise", "string"):
-        if _audit_counts is not None:
-            # caller already holds the full-table audit answer (the
-            # guess_types_with_audit single-job path — only legal when
-            # the guess sample covered every row); same counts, one
-            # fewer full-table agg job
-            bad = {c: _audit_counts.get(c, 0) for c in targets}
-        else:
-            audits = [
-                F.count(
-                    F.when(
-                        trim_and_nullify(F.col(c)).isNotNull()
-                        & _cast_expr(c, t).isNull(),
-                        1,
-                    )
-                ).alias(c)
-                for c, t in targets.items()
-            ]
-            bad = df.agg(*audits).collect()[0].asDict()
-        for c, cnt in bad.items():
-            if cnt and cnt > 0:
-                if on_error == "raise":
-                    raise BadTypeGuess(c, targets[c].simpleString(), cnt)
-                del targets[c]   # assume-column-is-string (lisp:398-404)
-                str_cols.append(c)
-    out_cols = []
-    for f in df.schema.fields:
-        if f.name in targets:
-            out_cols.append(_cast_expr(f.name, targets[f.name]).alias(f.name))
-        elif f.name in str_cols:
-            out_cols.append(trim_and_nullify(F.col(f.name)).alias(f.name))
-        else:
-            out_cols.append(F.col(f.name))
-    return df.select(*out_cols)
+    Spark's cast is NULL-on-failure; the reference RAISES. One audit
+    aggregate counts rows whose trimmed value is non-null but whose cast is
+    NULL. Type specs may be DataTypes or DDL strings ("decimal(10,2)")."""
+    _check_on_error(on_error)
+    types = _as_types(types)
+    audits = [] if on_error == "null" else list(_targets(df, types).items())
+    counts = _counts(df, [], audits)
+    bad = {c: counts[f"_a{j}"] for j, (c, _) in enumerate(audits)}
+    return _apply(df, types, bad, on_error)
 
 
 def auto_type(
@@ -336,6 +315,40 @@ def auto_type(
     infer_dates: bool = True,
 ) -> DataFrame:
     """End-to-end: infer missing types then coerce — the engine's equivalent
-    of ``get-data-table :auto-type t`` (clsql-data-table.lisp:13-19)."""
+    of ``get-data-table :auto-type t`` (clsql-data-table.lisp:13-19). For
+    frames without a row order: a head-sample guess job, then an audit
+    job over the table."""
     types = ensure_column_types(df, explicit, sample_size, infer_dates)
     return coerce_table(df, types, on_error=on_error)
+
+
+def auto_type_one_pass(
+    df: DataFrame,
+    row_id: str,
+    explicit: dict[str, T.DataType] | None = None,
+    sample_size: int = GUESSING_TYPES_SAMPLE_SIZE,
+    on_error: str = "string",
+    infer_dates: bool = True,
+) -> DataFrame:
+    """``auto_type`` for a frame with a dense 0-based row-order column
+    ``row_id``, in ONE aggregate job: guess counters over the head sample
+    (``row_id < sample_size``, the rows ``limit()`` returns), audit
+    counters over every row for each type the lattice may pick and each
+    explicit type."""
+    _check_on_error(on_error)
+    explicit = _as_types(explicit)
+    guess = _string_columns(df, {*explicit, row_id})
+    candidates = [T.LongType(), T.DoubleType()]
+    if infer_dates:
+        candidates.append(T.TimestampType())
+    audits = [(c, t) for c in guess for t in candidates]
+    audits += list(_targets(df, explicit).items())
+    counts = _counts(df, guess, audits, f"{_q(row_id)} < {int(sample_size)}")
+    types = {c: _pick(counts, i, infer_dates) for i, c in enumerate(guess)}
+    types.update(explicit)
+    bad = {
+        c: counts[f"_a{j}"]
+        for j, (c, t) in enumerate(audits)
+        if types[c] == t
+    }
+    return _apply(df, types, bad, on_error)

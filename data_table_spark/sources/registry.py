@@ -19,8 +19,7 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-#: rows per partition for driver-side literal relations — see
-#: core._LOCAL_SLICE_ROWS (same constant, same rationale: createDataFrame
+#: rows per partition for driver-side literal relations (createDataFrame
 #: over a python list parallelizes into defaultParallelism slices
 #: regardless of size, so every job over a few-row literal schedules a
 #: full wave of pickled-python tasks).
@@ -52,9 +51,10 @@ def local_df(spark: SparkSession, data, schema) -> DataFrame:
     downstream job that rescans the literal). NOT a coalesce: coalescing
     a default-parallelized literal runs its sub-partitions' python
     round trips SEQUENTIALLY inside one task (measured 4.4 s/job).
-    NOT the pandas/Arrow path (0.03 s) either: pandas would route
-    None-bearing int columns through float64, silently corrupting
-    longs past 2^53 — the engine-wide overflow class this repo bans."""
+    NOT through pandas either: pandas routes None-bearing int columns
+    through float64, corrupting longs past 2^53. An Arrow table built
+    from the rows with the resolved schema has no such problem
+    (core._local_relation); moving these literals onto it is open."""
     data = list(data) if not isinstance(data, list) else data
     if not data:
         return spark.createDataFrame(data, schema)

@@ -215,11 +215,11 @@ def test_format_for_output_keeps_dense_row_ids(spark):
 
 
 def test_fused_coerce_matches_two_job_path(spark):
-    """guess_types_with_audit (one job) must resolve the same types and
-    the same demotions as the guess-then-audit two-job path, including
-    the case the audit EXISTS for: a column the lattice types as LONG
-    whose values can't all cast (mixed int + date under
-    infer_dates=False) must still demote to string."""
+    """coerce_types' one-pass guess + audit must resolve the types and
+    demotions the reference does, including the case the audit EXISTS
+    for: a column the lattice types as LONG whose values can't all cast
+    (mixed int + date under infer_dates=False) must still demote to
+    string — with or without the row-count hint."""
     from data_table_spark.core import DataTable
     from data_table_spark.inference import BadTypeGuess
 
@@ -230,7 +230,7 @@ def test_fused_coerce_matches_two_job_path(spark):
     ]
     cols = ["i", "d", "ts", "mixed"]
     dt = DataTable.from_rows(spark, rows, cols)
-    assert dt._n_rows == 3  # fused path eligible
+    assert dt._n_rows == 3
 
     # infer_dates=False: 'ts' and 'mixed' both reach the LONG pick and
     # must both demote via the audit counters
@@ -247,7 +247,7 @@ def test_fused_coerce_matches_two_job_path(spark):
         "i": "bigint", "d": "double", "ts": "timestamp", "mixed": "string"
     }
 
-    # on_error='raise' must raise from the fused counters too
+    # on_error='raise' must raise from the audit counters
     try:
         dt.coerce_types(on_error="raise", infer_dates=False)
     except BadTypeGuess as e:
@@ -255,15 +255,15 @@ def test_fused_coerce_matches_two_job_path(spark):
     else:
         raise AssertionError("fused raise path did not raise")
 
-    # explicit types force the two-job path; results must agree with the
-    # fused path on the untouched columns
+    # explicit types ride the same pass; results must agree on the
+    # untouched columns
     out3 = dt.coerce_types(explicit={"mixed": "string"}, infer_dates=False)
     got3 = {f.name: f.dataType.simpleString() for f in out3.df.schema.fields}
     assert got3 == got_types
 
-    # values identical between the paths (not just the types)
+    # values identical without the hint (not just the types)
     big = DataTable.from_rows(spark, rows, cols)
-    object.__setattr__(big, "_n_rows", None)  # force the two-job path
+    object.__setattr__(big, "_n_rows", None)  # drop the row-count hint
     ref = big.coerce_types(infer_dates=False)
     assert [tuple(r) for r in out.df.orderBy("i").collect()] == [
         tuple(r) for r in ref.df.orderBy("i").collect()
